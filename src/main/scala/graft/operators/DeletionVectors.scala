@@ -116,33 +116,26 @@ object DeletionVectors {
 
   def hasDvs(vdir: Path): Boolean = dvMap(vdir).nonEmpty
 
-  private def linkOrCopy(src: Path, tgt: Path): Unit = {
-    Files.createDirectories(tgt.getParent)
-    try Files.createLink(tgt, src)
-    catch { case _: UnsupportedOperationException => Files.copy(src, tgt) }
-  }
-
   /** Carry EVERY sidecar of `srcVdir` into `stagedVdir` (restore/clone
     * paths — the file set transfers unchanged, so the DVs must too).
     * Returns the carried sidecar names for the staged manifest. */
   def carryAll(srcVdir: Path, stagedVdir: Path): Seq[String] =
-    dvMap(srcVdir).values.map { src =>
-      val name = src.getFileName.toString
-      linkOrCopy(src, dvDir(stagedVdir).resolve(name))
-      name
-    }.toSeq
+    carry(dvMap(srcVdir).values.toSeq, stagedVdir)
 
   /** Carry only the sidecars of the named CARRIED data files
     * (row-level commit paths: replaced files get fresh content, so
     * their old DVs must NOT follow). Returns carried sidecar names. */
   def carryFor(srcVdir: Path, stagedVdir: Path,
                carriedDataNames: Set[String]): Seq[String] =
-    dvMap(srcVdir).collect {
-      case (dataName, src) if carriedDataNames(dataName) =>
-        val name = src.getFileName.toString
-        linkOrCopy(src, dvDir(stagedVdir).resolve(name))
-        name
-    }.toSeq
+    carry(dvMap(srcVdir).collect {
+      case (dataName, src) if carriedDataNames(dataName) => src
+    }.toSeq, stagedVdir)
+
+  private def carry(srcs: Seq[Path], stagedVdir: Path): Seq[String] = {
+    if (srcs.nonEmpty) Files.createDirectories(dvDir(stagedVdir))
+    srcs.map(graft.sources.VersionedWriteIo.linkInto(_, dvDir(stagedVdir))
+      .getFileName.toString)
+  }
 
   def merge(existing: Array[Long], add: Array[Long]): Array[Long] =
     (existing ++ add).distinct.sorted

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** ROW TRACKING (Delta's rowTracking feature): every row of a
   * row-tracking table carries a stable long `_row_id`, assigned once
@@ -109,7 +109,7 @@ object RowIds {
   }
 
   // root hwm: read-modify-write of one small file, serialized in the
-  // driver JVM and published by atomic rename (the protocol-file
+  // driver JVM and published atomically (the protocol-file
   // discipline) — two concurrent commits advancing it cannot lose an
   // advance, and a reader never sees a torn value
   private val hwmLock = new Object
@@ -123,14 +123,9 @@ object RowIds {
 
   private def advanceRootHwm(root: Path, to: Long): Unit =
     hwmLock.synchronized {
-      if (to > rootHwm(root)) {
-        val tmp = Files.createTempFile(root, "_graft_rowid_hwm_", ".tmp")
-        Files.write(tmp, to.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        Files.move(tmp, root.resolve(HwmFile),
-          StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      }
+      if (to > rootHwm(root))
+        graft.sources.CommitStore.active.publishFile(root.resolve(HwmFile),
+          to.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
 
   /** Commit hook, run inside the files-manifest funnel AFTER the stats
@@ -139,23 +134,13 @@ object RowIds {
     * fresh bases to new files in sorted-name order starting at the
     * monotone mark, flag files that materialize ids (detected from the
     * just-written stats sidecar's column-presence markers — no extra
-    * footer reads), and advance the root mark. */
-  private def verOf(dir: Path): Option[Long] = {
-    val n = dir.getFileName.toString
-    if (n.startsWith("v=")) scala.util.Try(n.drop(2).toLong).toOption
-    else None
-  }
-
+    * footer reads), and advance the root mark. New files belong to
+    * `commitVer`, the version the commit is about to claim. */
   private[graft] def commit(root: Path, vdir: Path, dataNames: Seq[String],
-                            carryFrom: Option[Path]): Unit = {
+                            carryFrom: Option[Path], commitVer: Long): Unit = {
     val carriedState = carryFrom.flatMap(read)
     val carried = carriedState.map(_._2).getOrElse(Map.empty)
     val stats = FileStats.read(vdir)
-    // the commit version new files belong to: staged commits carry
-    // from their base (v=K → publishing as K+1); direct v=N writes
-    // name their own dir; a fresh table's first staged commit is v=0
-    val commitVer: Long = carryFrom.flatMap(verOf).map(_ + 1)
-      .orElse(verOf(vdir)).getOrElse(0L)
     val freshStats = dataNames.sorted.filterNot(carried.contains).map {
       n => n -> stats.getOrElse(n, FileStats.collect(vdir.resolve(n)))
     }
@@ -194,7 +179,7 @@ object RowIds {
       if (read(vdir).isEmpty)
         commit(Paths.get(root), vdir,
           Versioned.dataFiles(vdir).map(_.getFileName.toString),
-          carryFrom = None)
+          carryFrom = None, commitVer = v)
     }
   }
 

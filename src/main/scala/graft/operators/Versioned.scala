@@ -6,6 +6,8 @@ import java.util.Comparator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.{CommitStore, VersionedWriteIo}
+
 /** Versioned dataset storage + ops parity (SURVEY.md §2.1 S13/S14, §2.5
   * O3, §5 inline guards) — the Spark-side equivalent of the reference's
   * MinIO last-data/old-data swap (price_prediction_data_pipeline.py:
@@ -52,10 +54,10 @@ object Versioned {
 
   private[graft] def writeLatestHint(root: String, version: Long): Unit =
     // routed through the CommitStore seam (atomic metadata replace)
-    try graft.sources.CommitStore.active.publishFile(
+    try CommitStore.active.publishFile(
       Paths.get(root, LatestHint),
       version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: java.io.IOException => () } // best-effort: it's a hint
+    catch { case scala.util.control.NonFatal(_) => () } // best-effort: it's a hint
 
   private def readLatestHint(root: String): Option[Long] = {
     val f = Paths.get(root, LatestHint)
@@ -65,7 +67,7 @@ object Versioned {
   }
 
   def latestVersion(root: String): Option[Long] =
-    graft.sources.CommitStore.active.latestVersion(Paths.get(root))
+    CommitStore.active.latestVersion(Paths.get(root))
 
   /** The POSIX resolution behind [[graft.sources.PosixCommitStore]]:
     * verified hint + forward probe, full listing fallback. */
@@ -85,7 +87,7 @@ object Versioned {
     * on a store whose data movement is not atomic, the LOG — not a raw
     * directory listing — decides what is committed. */
   private[graft] def versions(root: String): Seq[Long] =
-    graft.sources.CommitStore.active.listVersions(Paths.get(root))
+    CommitStore.active.listVersions(Paths.get(root))
 
   /** The raw POSIX listing behind [[graft.sources.PosixCommitStore]]. */
   private[graft] def listVersionsPosix(root: String): Seq[Long] =
@@ -136,22 +138,19 @@ object Versioned {
     * readers filtering on the sort key. */
   def writeNext(df: DataFrame, root: String, commitTs: Option[Long] = None,
                 layout: Layout.WriteSpec = Layout.WriteSpec()): Long = {
-    // writer gate BEFORE any bytes land: writeNext writes v=N directly
-    // (no staging), so the manifest-time funnel check would fire after
-    // the data — too late to keep a half-created version dir off disk
+    // writer gate BEFORE the Spark job: a table whose invariants this
+    // build cannot maintain refuses the write without paying for it
     checkWriteProtocol(root)
-    val next = latestVersion(root).map(_ + 1).getOrElse(0L)
-    Layout.applySpec(df, layout).write
-      .options(Layout.writerOptions(layout))
-      .mode("overwrite").parquet(s"$root/v=$next")
-    // ONE listing at commit time buys manifest-resolved reads forever
-    val vdir = Paths.get(root, s"v=$next")
-    writeFilesManifest(vdir, listParquet(vdir).map(_.getFileName.toString))
-    writeLatestHint(root, next)
-    commitTs.foreach(writeStamp(root, next, _))
-    BloomSidecar.ensure(root, next) // no-op unless bloomFilterColumns set
-    NdvSidecar.ensure(root, next)
-    next
+    // Spark writes into a private staging dir, never into `v=N`: its
+    // `_temporary` dir would make the version resolvable before its
+    // data lands, and the version is only decided at the claim
+    val staged = Paths.get(root,
+      s"_staging_next_${java.util.UUID.randomUUID.toString.take(8)}")
+    try Layout.applySpec(df, layout).write
+      .options(Layout.writerOptions(layout)).parquet(staged.toString)
+    catch { case e: Throwable => deleteRecursively(staged); throw e }
+    VersionedWriteIo.commit(root, staged, commitTs)(
+      _ => VersionedWriteIo.Attempt())
   }
 
   private val CommitManifest = "_graft_commit"
@@ -213,7 +212,7 @@ object Versioned {
     CommitInfo(commitStamp(root, v), op, files.size,
       files.map(Files.size(_)).sum, dvs.size,
       dvs.values.map(DeletionVectors.cardinality).sum,
-      graft.sources.VersionedWriteIo.commitMessage(root, v),
+      VersionedWriteIo.commitMessage(root, v),
       Files.exists(Paths.get(feedDir(root, v))))
   }
 
@@ -263,8 +262,9 @@ object Versioned {
 
   /** Refresh the checkpoint to cover versions ≤ `cover`: carry rows the
     * previous checkpoint already holds, compute only the new tail —
-    * amortized O(1) facts per commit. Published via temp + atomic
-    * rename; serialized within the JVM like the tag/protocol files. */
+    * amortized O(1) facts per commit. Published atomically through the
+    * CommitStore seam; serialized within the JVM like the tag/protocol
+    * files. */
   private[graft] def writeCheckpoint(root: String, cover: Long): Unit =
     checkpointLock.synchronized {
       val carry = readCheckpoint(root) match {
@@ -288,12 +288,9 @@ object Versioned {
         o.put("feed", i.hasFeed)
         cpMapper.writeValueAsString(o)
       }
-      val tmp = Files.createTempFile(Paths.get(root), "_graft_checkpoint_", ".tmp")
-      Files.write(tmp, lines.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, Paths.get(root, CheckpointFile),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      CommitStore.active.publishFile(
+        Paths.get(root, CheckpointFile), lines.mkString("\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
 
   /** Invalidate checkpoint rows at/above a dropped version — rollback
@@ -734,7 +731,7 @@ object Versioned {
       else live.coalesce(nFiles)
     val staged = Files.createTempDirectory(Paths.get(root), "_staging_binpack_")
     rewritten.write.mode("overwrite").parquet(staged.toString)
-    graft.sources.VersionedWriteIo.commitRowLevel(root, staged,
+    VersionedWriteIo.commitRowLevel(root, staged,
       org.apache.spark.sql.types.StructType(rewritten.schema.fields), v, names,
       stamp.getOrElse(System.currentTimeMillis() * 1000L))
   }
@@ -775,21 +772,18 @@ object Versioned {
 
   // protocol mutations are read-modify-write over one small file — the
   // same discipline as the tags file: serialize within the driver JVM
-  // and publish via temp + atomic rename, so two concurrent commits
-  // flagging DIFFERENT features can't lose one, and a reader can never
-  // observe a truncated protocol (a lost deletion-vectors flag would
-  // let an older build silently resurrect deleted rows — the exact
-  // failure the protocol exists to prevent)
+  // and publish atomically (CommitStore.publishFile), so two
+  // concurrent commits flagging DIFFERENT features can't lose one, and
+  // a reader can never observe a truncated protocol (a lost
+  // deletion-vectors flag would let an older build silently resurrect
+  // deleted rows — the exact failure the protocol exists to prevent)
   private val protocolLock = new Object
 
   private def writeProtocol(root: Path, lines: Seq[String]): Unit = {
     val p = root.resolve(ProtocolFile)
-    if (lines.isEmpty) { Files.deleteIfExists(p); return }
-    val tmp = Files.createTempFile(root, "_graft_protocol_", ".tmp")
-    Files.write(tmp, lines.sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    if (lines.isEmpty) Files.deleteIfExists(p)
+    else CommitStore.active.publishFile(p, lines.sorted
+      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Writer-side: record that the table now needs `feature` to be read
@@ -927,12 +921,13 @@ object Versioned {
     * `f <name>` data file, `d <name>` deletion-vector sidecar. */
   private[graft] val FilesManifest = "_graft_files"
 
-  private[graft] def writeFilesManifest(vdir: Path, dataNames: Seq[String],
-                                        dvNames: Seq[String] = Seq.empty,
-                                        statsFrom: Option[Path] = None): Unit = {
-    // EVERY commit path funnels through this manifest write (direct
-    // v=N writes, staged publishes, restore/clone/convert, the DSv2
-    // commit loops) — so this is where the writer-feature gate runs:
+  private[graft] def writeFilesManifest(vdir: Path, version: Long,
+                                        dataNames: Seq[String],
+                                        dvNames: Seq[String],
+                                        statsFrom: Option[Path]): Unit = {
+    // EVERY commit path funnels through this manifest write (the one
+    // commit loop, VersionedWriteIo.commit, staging `version`) — so
+    // this is where the writer-feature gate runs:
     // a table whose invariants this build cannot maintain refuses the
     // commit before anything becomes visible
     checkWriteProtocol(vdir.getParent.toString)
@@ -950,11 +945,11 @@ object Versioned {
     // and row-level commits preserve ids because their carried files
     // keep their entries verbatim.
     if (RowIds.enabled(vdir.getParent.toString))
-      RowIds.commit(vdir.getParent, vdir, dataNames, statsFrom)
+      RowIds.commit(vdir.getParent, vdir, dataNames, statsFrom, version)
     // DV sidecars change what a correct read IS — flag the requirement
     // before the manifest (= the commit's visibility point) exists.
     // Staging dirs live inside the table root, so the parent is the
-    // root on every call path (direct v=N writes and staged publishes).
+    // root on every call path.
     // Writers need the flag too: a DV-blind build appending to (or
     // compacting) this table would drop or resurrect the DV'd rows.
     if (dvNames.nonEmpty) {
@@ -1117,16 +1112,13 @@ object Versioned {
     // streaming drain, byte-budget admission) manifest-resolved — a
     // stray parquet file (a task retry's orphan Spark's committer
     // missed, an operator mistake) can never REPLAY A PHANTOM CHANGE.
-    // Published via temp + atomic rename so a crash mid-write leaves
-    // either no manifest (listing fallback) or a complete one.
+    // Published atomically so a crash mid-write leaves either no
+    // manifest (listing fallback) or a complete one.
     val fdir = Paths.get(feedDir(root, version))
     val names = listParquet(fdir).map(_.getFileName.toString).sorted
-    val tmp = Files.createTempFile(fdir, "_graft_files_", ".tmp")
-    Files.write(tmp, names.map("f " + _).mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, fdir.resolve(FilesManifest),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    CommitStore.active.publishFile(fdir.resolve(FilesManifest),
+      names.map("f " + _).mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Read the current (or a pinned) version. Files resolve through the
@@ -1183,34 +1175,23 @@ object Versioned {
     require(Files.isDirectory(src),
       s"restoreTo: version $version does not exist under $root " +
         s"(existing: ${versions(root).mkString(", ")})")
-    val cur = latestVersion(root).get
+    val cur = latestVersion(root)
     val staged = Files.createTempDirectory(Paths.get(root), "_staging_restore_")
-    dataFiles(src).foreach { f =>
-      val tgt = staged.resolve(f.getFileName)
-      try Files.createLink(tgt, f)
-      catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
-    }
     // hard-links keep file names, so the restored manifest lists the
-    // same names the source manifest did (plus its DV sidecars, below)
-    writeFilesManifest(staged,
-      listParquet(staged).map(_.getFileName.toString),
-      DeletionVectors.carryAll(src, staged), statsFrom = Some(src))
-    val next = cur + 1
-    try Files.move(staged, Paths.get(root, s"v=$next"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case e: java.nio.file.FileSystemException =>
-        deleteRecursively(staged)
-        throw new IllegalStateException(
-          s"restoreTo: concurrent commit under $root — retry", e)
+    // same names the source manifest did (plus its DV sidecars), and
+    // stats, bloom and ndv lines carry from src
+    dataFiles(src).foreach(VersionedWriteIo.linkInto(_, staged))
+    val dvNames = DeletionVectors.carryAll(src, staged)
+    VersionedWriteIo.commit(root, staged,
+      Some(VersionedWriteIo.stampValue(commitTs)), carryExtra = Some(src)) {
+      base =>
+        // a commit that landed after `cur` was read is one the restore
+        // never saw — restoring over it would silently revert it
+        if (base != cur) throw new IllegalStateException(
+          s"restoreTo: concurrent commit under $root (read v=" +
+            s"${cur.getOrElse(-1L)}, latest is v=${base.getOrElse(-1L)}) — retry")
+        VersionedWriteIo.Attempt(dvNames, statsFrom = Some(src))
     }
-    writeLatestHint(root, next)
-    writeStamp(root, next,
-      commitTs.getOrElse(System.currentTimeMillis() * 1000L))
-    // restored files are hard links of src's — their bloom lines carry
-    BloomSidecar.ensure(root, next, carryExtra = Some(src))
-    NdvSidecar.ensure(root, next, carryExtra = Some(src))
-    next
   }
 
   /** SHALLOW CLONE: materialize a snapshot of `srcRoot` (the CURRENT
@@ -1232,16 +1213,13 @@ object Versioned {
     val srcV = srcVersion.orElse(latestVersion(srcRoot))
       .getOrElse(throw new IllegalStateException(
         s"cloneTo: no versions under $srcRoot"))
-    require(!Files.exists(Paths.get(dstRoot, "v=0")),
-      s"cloneTo: destination $dstRoot already has versions")
-    val dst = Paths.get(dstRoot, "v=0")
-    Files.createDirectories(dst.getParent)
-    val staged = Files.createTempDirectory(dst.getParent, "_staging_clone_")
-    dataFiles(Paths.get(srcRoot, s"v=$srcV")).foreach { f =>
-      val tgt = staged.resolve(f.getFileName)
-      try Files.createLink(tgt, f)
-      catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
-    }
+    val srcDir = Paths.get(srcRoot, s"v=$srcV")
+    def requireFresh(exists: Boolean): Unit =
+      require(!exists, s"cloneTo: destination $dstRoot already has versions")
+    requireFresh(Files.exists(Paths.get(dstRoot, "v=0")))
+    val staged = Files.createTempDirectory(
+      Files.createDirectories(Paths.get(dstRoot)), "_staging_clone_")
+    dataFiles(srcDir).foreach(VersionedWriteIo.linkInto(_, staged))
     // the clone inherits every protocol requirement of the source —
     // shared immutable files mean shared representation (and shared
     // invariants on the writer side). Inherited BEFORE the manifest
@@ -1253,18 +1231,15 @@ object Versioned {
       requireReaderFeature(Paths.get(dstRoot), _))
     writerFeatures(srcRoot).foreach(
       requireWriterFeature(Paths.get(dstRoot), _))
-    writeFilesManifest(staged,
-      listParquet(staged).map(_.getFileName.toString),
-      DeletionVectors.carryAll(Paths.get(srcRoot, s"v=$srcV"), staged),
-      statsFrom = Some(Paths.get(srcRoot, s"v=$srcV")))
-    Files.move(staged, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    writeLatestHint(dstRoot, 0L)
-    writeStamp(dstRoot, 0L,
-      commitTs.getOrElse(System.currentTimeMillis() * 1000L))
-    // the clone shares the source's immutable files — bloom lines carry
-    BloomSidecar.ensure(dstRoot, 0L,
-      carryExtra = Some(Paths.get(srcRoot, s"v=$srcV")))
-    NdvSidecar.ensure(dstRoot, 0L, carryExtra = Some(Paths.get(srcRoot, s"v=$srcV")))
+    val dvNames = DeletionVectors.carryAll(srcDir, staged)
+    // the clone shares the source's immutable files — stats, bloom and
+    // ndv lines carry
+    VersionedWriteIo.commit(dstRoot, staged,
+      Some(VersionedWriteIo.stampValue(commitTs)), carryExtra = Some(srcDir)) {
+      base =>
+        requireFresh(base.nonEmpty)
+        VersionedWriteIo.Attempt(dvNames, statsFrom = Some(srcDir))
+    }
   }
 
   /** CONVERT-in-place (Delta's `CONVERT TO DELTA` shape): register an
@@ -1274,9 +1249,9 @@ object Versioned {
     * analog of an object-store metadata pointer; a cross-device source
     * falls back to a copy rather than failing the onboarding), the
     * commit manifest + stats sidecar derive from footers alone, and one
-    * atomic rename publishes. At 100 TB this is the difference between
-    * onboarding a lake in footer-read time and re-writing every byte
-    * through a cluster.
+    * claim of the commit loop publishes. At 100 TB this is the
+    * difference between onboarding a lake in footer-read time and
+    * re-writing every byte through a cluster.
     *
     * `validateFile` runs per source file BEFORE it is linked — the
     * caller's chance to refuse files whose footer schema the table
@@ -1293,35 +1268,28 @@ object Versioned {
     val files = listParquet(src).sortBy(_.getFileName.toString)
     require(files.nonEmpty,
       s"convertFrom: no *.parquet files under $srcDir — nothing to convert")
-    require(latestVersion(dstRoot).isEmpty,
-      s"convertFrom: destination $dstRoot already has versions")
-    val dst = Paths.get(dstRoot, "v=0")
-    Files.createDirectories(dst.getParent)
-    val staged = Files.createTempDirectory(dst.getParent, "_staging_convert_")
+    def requireFresh(latest: Option[Long]): Unit =
+      require(latest.isEmpty,
+        s"convertFrom: destination $dstRoot already has versions")
+    requireFresh(latestVersion(dstRoot))
+    val staged = Files.createTempDirectory(
+      Files.createDirectories(Paths.get(dstRoot)), "_staging_convert_")
+    // validation (a footer read each) and linking are independent per
+    // file and latency-bound — run them in parallel so a 100k-file
+    // onboarding is bounded by pool width, not file count
     try {
-      // validation (a footer read each) and linking are independent
-      // per file and latency-bound — run them in parallel so a
-      // 100k-file onboarding is bounded by pool width, not file count
       import FileStats.ParMap
       files.toArray.par { f =>
         validateFile(f)
-        val tgt = staged.resolve(f.getFileName)
-        try Files.createLink(tgt, f)
-        catch {
-          case _: UnsupportedOperationException |
-               _: java.nio.file.FileSystemException => Files.copy(f, tgt)
-        }
+        VersionedWriteIo.linkInto(f, staged)
       }
-      writeFilesManifest(staged, files.map(_.getFileName.toString))
-      // the publish move stays INSIDE the try: a concurrent convert
-      // that already created v=0 fails it, and the staging dir full of
-      // hard links must not leak under the destination root
-      Files.move(staged, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } catch { case e: Throwable => deleteRecursively(staged); throw e }
-    writeLatestHint(dstRoot, 0L)
-    writeStamp(dstRoot, 0L,
-      commitTs.getOrElse(System.currentTimeMillis() * 1000L))
-    0L
+    // a concurrent convert that claimed v=0 first fails this one loudly
+    VersionedWriteIo.commit(dstRoot, staged,
+      Some(VersionedWriteIo.stampValue(commitTs))) { base =>
+      requireFresh(base)
+      VersionedWriteIo.Attempt()
+    }
   }
 
   /** METADATA INTEGRITY CHECK (`CALL sys.fsck`) — walk every version's
@@ -1492,18 +1460,16 @@ object Versioned {
 
   // tag mutations are read-modify-write over one small file: serialize
   // them within the driver JVM (admin verbs, one driver in practice)
-  // and publish via temp + atomic rename so a crash mid-write can
-  // never leave a torn tag file behind
+  // and publish atomically (CommitStore.publishFile) so a crash
+  // mid-write can never leave a torn tag file behind
   private val tagsLock = new Object
 
   private def writeTags(root: String, ts: Map[String, Long]): Unit = {
     val p = Paths.get(root, TagsFile)
-    if (ts.isEmpty) { Files.deleteIfExists(p); return }
-    val tmp = Files.createTempFile(p.getParent, "_graft_tags_", ".tmp")
-    Files.write(tmp, ts.toSeq.sorted.map { case (n, v) => s"$n $v" }
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    if (ts.isEmpty) Files.deleteIfExists(p)
+    else CommitStore.active.publishFile(p,
+      ts.toSeq.sorted.map { case (n, v) => s"$n $v" }
+        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Bind `name` to `version` (default: current latest). Loud on a

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -79,17 +79,8 @@ object AutoColumns {
   }
 
   def write(root: java.nio.file.Path, specs: Seq[Spec]): Unit =
-    atomicWrite(root.resolve(ManifestFile), serialize(specs)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def atomicWrite(p: Path, bytes: Array[Byte]): Unit = {
-    val tmp = p.resolveSibling(
-      p.getFileName.toString + ".tmp-" +
-        java.util.UUID.randomUUID.toString.take(8))
-    Files.write(tmp, bytes)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+    CommitStore.active.publishFile(root.resolve(ManifestFile),
+      serialize(specs).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Commit-side hwm publication: advance each named identity column's
     * persisted mark to `next` (monotone in the column's step
@@ -117,7 +108,7 @@ object AutoColumns {
           else { changed = true; id.copy(hwm = Some(merged)) }
         case s => s
       }
-      if (changed) atomicWrite(p, serialize(updated)
+      if (changed) CommitStore.active.publishFile(p, serialize(updated)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
   }

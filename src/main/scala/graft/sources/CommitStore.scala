@@ -7,8 +7,13 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * Every transactional guarantee the format makes — serialized
   * multi-writer appends, file-level conflict rebase, torn-write-free
   * metadata — reduces to three storage primitives, isolated here so
-  * the POSIX assumptions live in ONE class instead of every commit
-  * path:
+  * the POSIX assumptions live in ONE class. Every version publish —
+  * DSv2 appends, overwrites, streaming epochs, row-level and delta
+  * commits, restore, clone, convert and `Versioned.writeNext` — runs
+  * through the one commit loop [[VersionedWriteIo.commit]], which
+  * claims through [[publishVersion]]; every small metadata file (latest
+  * hint, tags, protocol, checkpoint, row-id mark, catalog manifests)
+  * publishes through [[publishFile]]:
   *
   *  1. [[CommitStore.publishVersion]] — publish a fully-staged
   *     directory as `v=N` iff nobody else has: the put-if-absent that
@@ -26,10 +31,10 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * a store whose [[CommitStore.publishVersion]] claims the version
   * through a conditional put / coordinator (the S3+DynamoDB LogStore
   * answer, or S3's If-None-Match conditional PUT) and moves the data
-  * non-atomically AFTER the claim — the commit loops in
-  * [[VersionedWriteIo]] only require the CLAIM to be atomic and
-  * fail-closed, never the data movement ([[CommitStoreSpec]] proves
-  * serialization under exactly such a store). Install via
+  * non-atomically AFTER the claim — the commit loop only requires the
+  * CLAIM to be atomic and fail-closed, never the data movement
+  * (CommitStoreSpec proves serialization under exactly such a store
+  * for every publish path). Install via
   * [[CommitStore.withStore]] (scoped) or [[CommitStore.install]]
   * (process-wide, at session bring-up).
   */
@@ -85,14 +90,17 @@ object PosixCommitStore extends CommitStore {
     }
   }
 
-  override def publishFile(target: Path, bytes: Array[Byte]): Unit = {
-    // `_graft_*.tmp` so a crash between write and rename leaves only
-    // what vacuumRootTmp already sweeps
+  override def publishFile(target: Path, bytes: Array[Byte]): Unit =
+    Files.move(writeTemp(target, bytes), target,
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+
+  /** The temp half of [[publishFile]], beside `target`: named
+    * `_graft_*.tmp` so a crash between write and rename leaves only
+    * what `sys.vacuum`'s temp sweeps remove. */
+  private[graft] def writeTemp(target: Path, bytes: Array[Byte]): Path = {
     val tmp = Files.createTempFile(target.getParent,
       "_graft_" + target.getFileName.toString + "_", ".tmp")
     Files.write(tmp, bytes)
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
   }
 
   // on POSIX the rename IS atomic, so the directory listing is the log

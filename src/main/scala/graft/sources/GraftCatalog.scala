@@ -80,17 +80,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private val ConstraintsManifest = "_graft_constraints"
   private val ColMapManifest = "_graft_colmap"
   private val NsMarker = "_graft_namespace"
-
-  /** Every manifest publication is staged-write + atomic rename: a
-    * concurrent reader sees the old contract or the new one, never a
-    * missing or half-written manifest. */
-  private def atomicWrite(p: Path, bytes: Array[Byte]): Unit = {
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp-" +
-      java.util.UUID.randomUUID.toString.take(8))
-    Files.write(tmp, bytes)
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  // every manifest above publishes through CommitStore.publishFile: a
+  // concurrent reader sees the old contract or the new one, never a
+  // half-written manifest, and a crashed publish leaves only
+  // `_graft_*.tmp` debris that sys.vacuum sweeps
 
   /** COLUMN MAPPING manifest: `m<TAB>logical<TAB>physical` per live
     * column plus `r<TAB>physical` per retired (dropped) physical name.
@@ -117,7 +110,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def writeColMap(ident: Identifier, map: Map[String, String],
                           retired: Set[String]): Unit =
-    atomicWrite(tablePath(ident).resolve(ColMapManifest),
+    CommitStore.active.publishFile(tablePath(ident).resolve(ColMapManifest),
       (map.toSeq.sortBy(_._1).map { case (l, p) => s"m\t$l\t$p" } ++
         retired.toSeq.sorted.map(p => s"r\t$p"))
         .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -147,7 +140,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                                cs: Seq[(String, String)]): Unit = {
     val p = tablePath(ident).resolve(ConstraintsManifest)
     if (cs.isEmpty) Files.deleteIfExists(p)
-    else atomicWrite(p, cs.map { case (n, sql) => s"$n\t$sql" }
+    else CommitStore.active.publishFile(p, cs.map { case (n, sql) => s"$n\t$sql" }
       .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
@@ -703,7 +696,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         }
       }
     Files.createDirectories(tablePath(ident))
-    atomicWrite(manifestOf(ident),
+    CommitStore.active.publishFile(manifestOf(ident),
       schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val layoutProps =
       Seq("clusterBy", "writePartitions", "targetFileBytes", "changeFeedKeys",
@@ -713,7 +706,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         graft.operators.NdvSidecar.PropKey)
         .flatMap(k => Option(properties.get(k)).filter(_.nonEmpty).map(v => s"$k=$v"))
     if (layoutProps.nonEmpty)
-      atomicWrite(tablePath(ident).resolve(PropsManifest),
+      CommitStore.active.publishFile(tablePath(ident).resolve(PropsManifest),
         layoutProps.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     else Files.deleteIfExists(tablePath(ident).resolve(PropsManifest))
     // the append-only promise binds every FUTURE writer of the table —
@@ -1073,7 +1066,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             "change the meaning of immutable history")
     }
     GroupParquetIo.writeMessageType(schema) // evolved schema must stay writable
-    Files.write(m, schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    CommitStore.active.publishFile(m,
+      schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     writeProps(ident, props)
     // persist the mapping once it carries information (a rename, a
     // drop, or a collision-renamed physical); identity tables skip it
@@ -1105,8 +1099,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def writeProps(ident: Identifier, props: Map[String, String]): Unit = {
     val p = tablePath(ident).resolve(PropsManifest)
     if (props.isEmpty) Files.deleteIfExists(p)
-    else atomicWrite(p, props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    else CommitStore.active.publishFile(p,
+      props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
+        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   override def dropTable(ident: Identifier): Boolean = {
@@ -1700,8 +1695,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                 s"graft catalog: ref-clone of $src@${srcV.get} pins an " +
                   "empty schema — the snapshot's files share no column " +
                   "with the current contract")
-              Files.write(manifestOf(tgtIdent), pinned.json.getBytes(
-                java.nio.charset.StandardCharsets.UTF_8))
+              CommitStore.active.publishFile(manifestOf(tgtIdent),
+                pinned.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
               val pinnedProps = readProps(srcIdent).flatMap {
                 case ("partitionedBy", v) =>
                   // a transform entry survives only if BOTH its source
@@ -1823,7 +1818,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             validate)
           // the schema manifest lands LAST: a failed conversion leaves
           // no half-created table visible to loadTable
-          Files.write(manifestOf(tgtIdent),
+          CommitStore.active.publishFile(manifestOf(tgtIdent),
             schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           Seq(new GenericInternalRow(Array[Any](
             org.apache.spark.unsafe.types.UTF8String.fromString(tgt),

@@ -4216,7 +4216,8 @@ private[graft] object VersionedWriteIo {
     * through its one atomic rename, so any `*.parquet` the manifest
     * does not name (a crashed task's stray, an operator mistake, a
     * planted alien), any `.dv` sidecar the manifest does not list, and
-    * any stale sidecar temp file is garbage — already INVISIBLE to
+    * any stale sidecar temp file (`_graft_*.tmp`: bloom, ndv, stats
+    * and sidecar-rewrite publishes) is garbage — already INVISIBLE to
     * every manifest-resolved reader, but still billed storage at
     * object-store scale. Age-gated like the staging sweep; versions
     * without a manifest (pre-manifest history) are never touched —
@@ -4250,7 +4251,7 @@ private[graft] object VersionedWriteIo {
             val s = Files.list(vdir)
             try s.iterator().asScala.filter { f =>
               val n = f.getFileName.toString
-              n.startsWith("_graft_bloom_") && n.endsWith(".tmp")
+              n.startsWith("_graft_") && n.endsWith(".tmp")
             }.filter(old).toList
             finally s.close()
           }
@@ -4291,26 +4292,144 @@ private[graft] object VersionedWriteIo {
     * of a delta commit: `_dvfrag/<dataFileName>/<task>.dv`. */
   private[sources] val FragDir = "_dvfrag"
 
+  /** What one attempt of [[commit]] staged against its base: the DV
+    * sidecar names the manifest lists, the base-dependent links a lost
+    * claim must undo, and the version whose stats (and row-id) lines
+    * carry over for name-stable files. */
+  private[graft] final case class Attempt(
+      dvNames: Seq[String] = Nil, undo: Seq[Path] = Nil,
+      statsFrom: Option[Path] = None)
+
+  /** Retry bound of [[commit]]: a lost claim past this many attempts
+    * is extreme contention or an unwritable root, never a state to
+    * spin in. */
+  private val MaxAttempts = 20
+
+  /** THE commit loop of the versioned store — every version publish
+    * (DSv2 append/overwrite/streaming epochs, row-level and delta
+    * commits, restore, clone, convert, `writeNext`) runs through it,
+    * so the claim discipline and the [[CommitStore]] seam live in one
+    * place. Optimistic concurrency, per attempt:
+    *
+    *  1. read the latest version as the base;
+    *  2. run the caller's `stage` step against it — it relinks the
+    *     carry-over (append: every base file; row-level: the base minus
+    *     the replaced files; delta: every base file plus merged DVs),
+    *     returns the carried DV sidecar names, and may reject the
+    *     rebase by throwing (an intervening overlapping commit, a
+    *     commit that overtook a restore, a clone or convert target
+    *     that gained a version);
+    *  3. write the files manifest (the visibility point);
+    *  4. claim `v=base+1` through [[CommitStore.publishVersion]];
+    *  5. on a won claim run the one post-publish sequence — latest
+    *     hint, the optional commit stamp, bloom and ndv sidecars (the
+    *     hint and sidecars are best-effort: the version is already
+    *     committed, so they must not fail the write and provoke a
+    *     double-applying retry);
+    *  6. on a lost claim undo the attempt's links and retry against
+    *     the NEW latest — serialized multi-writer commits without a
+    *     lock service, bounded by [[MaxAttempts]] and loud past it.
+    *
+    * Any failure before a won claim deletes `staged`. Returns the
+    * committed version. */
+  private[graft] def commit(root: String, staged: Path,
+                            stamp: Option[Long],
+                            carryExtra: Option[Path] = None)(
+      stage: Option[Long] => Attempt): Long = {
+    try {
+      var attempt = 0
+      while (attempt < MaxAttempts) {
+        val base = Versioned.latestVersion(root)
+        val a = stage(base)
+        val next = base.fold(0L)(_ + 1)
+        Versioned.writeFilesManifest(staged, next,
+          Versioned.listParquet(staged).map(_.getFileName.toString),
+          a.dvNames, a.statsFrom)
+        if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) {
+          Versioned.writeLatestHint(root, next)
+          stamp.foreach(Versioned.writeStamp(root, next, _))
+          // sidecars (no-op unless configured): carried files reuse
+          // their lines from the base version or `carryExtra`, new
+          // files get one build scan
+          graft.operators.BloomSidecar.ensure(root, next, carryExtra)
+          graft.operators.NdvSidecar.ensure(root, next, carryExtra)
+          return next
+        }
+        a.undo.foreach(Files.deleteIfExists(_))
+        attempt += 1 // v=next claimed concurrently — re-read and rebase
+      }
+      throw new IllegalStateException(
+        s"graft-versioned: could not commit under $root after " +
+          s"$MaxAttempts attempts — either extreme write contention or " +
+          "the root is not writable")
+    } catch { case e: Throwable => Versioned.deleteRecursively(staged); throw e }
+  }
+
+  /** Hard-link `src` into `dir` under the SAME name (file names are
+    * unique at creation and immutable for life — the identity DV
+    * sidecars, conflict checks and carry-over key on), falling back to
+    * a byte copy where linking is impossible: no link support, or a
+    * source on another device. The one carry-over primitive of the
+    * store. Returns the new path. */
+  private[graft] def linkInto(src: Path, dir: Path): Path = {
+    val tgt = dir.resolve(src.getFileName.toString)
+    try Files.createLink(tgt, src)
+    catch {
+      case _: UnsupportedOperationException |
+           _: java.nio.file.FileSystemException => Files.copy(src, tgt)
+    }
+    tgt
+  }
+
+  /** An [[Attempt]] whose data links and DV sidecars were all carried
+    * from `base` — all of it is undone if the claim is lost. */
+  private def carried(staged: Path, links: Seq[Path], dvNames: Seq[String],
+                      base: Option[Path]): Attempt =
+    Attempt(dvNames,
+      links ++ dvNames.map(graft.operators.DeletionVectors.dvDir(staged).resolve(_)),
+      base)
+
+  /** The file-level conflict check of row-level and delta commits:
+    * rebasing from `scanned` onto the latest is legal iff every commit
+    * in between is a row-level commit whose replaced set is disjoint
+    * from `touched` (Delta's file-level conflict check — positions and
+    * replacements stay valid because file names are immutable
+    * identities). An intervening append/overwrite, whose rows this
+    * operation never saw, or any overlap fails loudly. Returns the
+    * base to rebase onto. */
+  private def rebaseBase(root: String, op: String, scanned: Long,
+                         latest: Option[Long], touched: Set[String]): Long = {
+    val base = latest.getOrElse(rebaseConflict(root, op, scanned, latest,
+      "no versions left"))
+    ((scanned + 1) to base).foreach { v =>
+      rowLevelReplaced(root, v) match {
+        case None => rebaseConflict(root, op, scanned, latest,
+          s"v=$v is not a row-level commit")
+        case Some(replaced) =>
+          val overlap = replaced.intersect(touched)
+          if (overlap.nonEmpty) rebaseConflict(root, op, scanned, latest,
+            s"v=$v also replaced ${overlap.mkString(", ")}")
+      }
+    }
+    base
+  }
+
+  private def rebaseConflict(root: String, op: String, scanned: Long,
+                             latest: Option[Long], why: String): Nothing =
+    throw new IllegalStateException(
+      s"graft-versioned: concurrent commit under $root during a $op " +
+        s"(scanned v=$scanned, latest is v=${latest.getOrElse(-1L)}; " +
+        s"$why) — retry the statement against current data")
+
   /** Publish a DELTA commit: the staged dir holds insert part files
     * plus per-task DV fragments; the new version hard-links EVERY data
     * file of the base version (nothing is replaced), adds the insert
     * files, and writes per-file sidecars merging the base's DVs with
-    * the fragments. Same file-level conflict discipline as
-    * [[commitRowLevel]] with the DV'd files as the touched set:
-    * intervening DISJOINT row-level commits rebase (positions stay
-    * valid — file names are immutable identities), overlap or an
-    * intervening append/overwrite aborts loudly. */
+    * the fragments. The DV'd files are the touched set of
+    * [[rebaseBase]]'s conflict check. */
   def commitDelta(root: String, staged: Path, scannedVersion: Long,
                   stamp: Long): Long = {
     import graft.operators.DeletionVectors
-    def conflict(why: String): Nothing = {
-      Versioned.deleteRecursively(staged)
-      throw new IllegalStateException(
-        s"graft-versioned: concurrent commit under $root during a " +
-          s"merge-on-read mutation (scanned v=$scannedVersion, latest is " +
-          s"v=${Versioned.latestVersion(root).getOrElse(-1L)}; $why) — " +
-          "retry the statement against current data")
-    }
     // merge the per-task fragments: data file name → new positions
     val fragBase = staged.resolve(FragDir)
     val newPos: Map[String, Array[Long]] =
@@ -4334,37 +4453,18 @@ private[graft] object VersionedWriteIo {
       }
     Versioned.deleteRecursively(fragBase)
     val touched = newPos.keySet
-    var attempt = 0
-    var linked: Seq[Path] = Nil
-    var linkedDvs: Seq[Path] = Nil
-    while (attempt < 20) {
-      val base = Versioned.latestVersion(root).getOrElse(
-        conflict("no versions left"))
-      if (base != scannedVersion) {
-        ((scannedVersion + 1) to base).foreach { v =>
-          rowLevelReplaced(root, v) match {
-            case None => conflict(s"v=$v is not a row-level commit")
-            case Some(replaced) =>
-              val overlap = replaced.intersect(touched)
-              if (overlap.nonEmpty)
-                conflict(s"v=$v also touched ${overlap.mkString(", ")}")
-          }
-        }
-      }
-      val baseDir = Paths.get(root, s"v=$base")
-      linked.foreach(Files.deleteIfExists(_))
-      linkedDvs.foreach(Files.deleteIfExists(_))
+    val op = "merge-on-read mutation"
+    writeRowLevelMarker(staged, touched)
+    commit(root, staged, Some(stamp)) { latest =>
+      val baseDir = Paths.get(root,
+        s"v=${rebaseBase(root, op, scannedVersion, latest, touched)}")
       val baseFiles = Versioned.dataFiles(baseDir)
       val missing = touched -- baseFiles.map(_.getFileName.toString).toSet
       if (missing.nonEmpty)
-        conflict(s"deltas target files no longer present: ${missing.mkString(", ")}")
+        rebaseConflict(root, op, scannedVersion, latest,
+          s"deltas target files no longer present: ${missing.mkString(", ")}")
       // every base file carries over untouched (nothing is replaced)
-      linked = baseFiles.map { f =>
-        val tgt = staged.resolve(f.getFileName.toString)
-        try Files.createLink(tgt, f)
-        catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
-        tgt
-      }
+      val links = baseFiles.map(linkInto(_, staged))
       // sidecars: base DVs ∪ this commit's fragments, per file
       val baseDvs = DeletionVectors.dvMap(baseDir)
       val dvNames = baseFiles.flatMap { f =>
@@ -4380,24 +4480,8 @@ private[graft] object VersionedWriteIo {
           n + DeletionVectors.Suffix
         }
       }
-      linkedDvs = dvNames.map(DeletionVectors.dvDir(staged).resolve(_))
-      writeRowLevelMarker(staged, touched)
-      Versioned.writeFilesManifest(staged,
-        Versioned.listParquet(staged).map(_.getFileName.toString), dvNames,
-        statsFrom = Some(baseDir))
-      val next = base + 1
-      if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) {
-        Versioned.writeLatestHint(root, next)
-        Versioned.writeStamp(root, next, stamp)
-        // bloom sidecar (no-op unless configured): carried files reuse
-        // their lines from the base version, new files get one build scan
-        graft.operators.BloomSidecar.ensure(root, next)
-        graft.operators.NdvSidecar.ensure(root, next)
-        return next
-      }
-      attempt += 1 // v=next claimed concurrently — re-check and rebase
+      carried(staged, links, dvNames, Some(baseDir))
     }
-    conflict("20 rebase attempts exhausted")
   }
 
   /** MERGE-ON-READ DELETE: commit a new version whose data files are
@@ -4475,104 +4559,46 @@ private[graft] object VersionedWriteIo {
   /** Publish a row-level operation's staged output as the next
     * version: staged files REPLACE the scanned files of the scanned
     * snapshot; every unscanned file hard-links over unchanged, SAME
-    * name (file names are unique at creation and immutable for life,
-    * so identity survives commits), and carried files keep their
-    * deletion-vector sidecars while replaced files shed theirs (their
-    * rewritten content already excludes the DV'd rows).
+    * name, and carried files keep their deletion-vector sidecars while
+    * replaced files shed theirs (their rewritten content already
+    * excludes the DV'd rows).
     *
-    * CONCURRENCY is file-level, Delta-style: a concurrent commit that
-    * landed between this operation's scan and its commit does NOT
-    * automatically abort it. If EVERY intervening commit is itself a
-    * row-level commit whose replaced file set is DISJOINT from this
-    * scan's, the commit REBASES — it replays its replacement against
-    * the new latest snapshot (the scanned files still exist there,
-    * untouched by the disjoint commits, and every file those commits
-    * added or rewrote carries over). Two UPDATEs on different
-    * clustered key ranges both commit; the merged table equals the
-    * sequential result. Any overlap — or any intervening append /
-    * overwrite, whose rows this operation never saw — still fails
-    * loudly: silently re-basing over those would resurrect
-    * concurrently-deleted rows or drop concurrent appends. */
+    * A concurrent commit between this operation's scan and its commit
+    * does not automatically abort it: [[rebaseBase]] replays the
+    * replacement against the new latest when every intervening commit
+    * is a DISJOINT row-level commit (the scanned files still exist
+    * there, and every file those commits added or rewrote carries
+    * over). Two UPDATEs on different clustered key ranges both commit;
+    * the merged table equals the sequential result. Rebasing over an
+    * overlap or an append/overwrite would resurrect concurrently
+    * deleted rows or drop concurrent appends, so those fail loudly. */
   def commitRowLevel(root: String, staged: Path, schema: StructType,
                      scannedVersion: Long, scannedNames: Set[String],
                      stamp: Long): Long = {
-    def conflict(why: String): Nothing = {
-      Versioned.deleteRecursively(staged)
-      throw new IllegalStateException(
-        s"graft-versioned: concurrent commit under $root during a " +
-          s"row-level operation (scanned v=$scannedVersion, latest is " +
-          s"v=${Versioned.latestVersion(root).getOrElse(-1L)}; $why) — " +
-          "retry the statement against current data")
-    }
     GraftVersionedTable.recordVariantCols(root, schema)
-    // the staged output (the replacement rows) is fixed; the base we
-    // rebase onto may advance while we retry against racing committers
-    var attempt = 0
-    var carried: Seq[Path] = Nil
-    var carriedDvs: Seq[Path] = Nil
-    while (attempt < 20) {
-      val base = Versioned.latestVersion(root).getOrElse(
-        conflict("no versions left"))
-      if (base != scannedVersion) {
-        // rebase eligibility: every commit in (scanned, base] must be a
-        // row-level commit whose replaced set is disjoint from ours
-        ((scannedVersion + 1) to base).foreach { v =>
-          rowLevelReplaced(root, v) match {
-            case None => conflict(s"v=$v is not a row-level commit")
-            case Some(replaced) =>
-              val overlap = replaced.intersect(scannedNames)
-              if (overlap.nonEmpty)
-                conflict(s"v=$v also replaced ${overlap.mkString(", ")}")
-          }
-        }
-      }
-      val baseDir = Paths.get(root, s"v=$base")
+    writeRowLevelMarker(staged, scannedNames)
+    commit(root, staged, Some(stamp)) { latest =>
+      val baseDir = Paths.get(root, s"v=${rebaseBase(root,
+        "row-level operation", scannedVersion, latest, scannedNames)}")
       // (re)link the carry-over against the CURRENT base: everything
       // the base holds except the files we are replacing
-      carried.foreach(Files.deleteIfExists(_))
-      carriedDvs.foreach(Files.deleteIfExists(_))
       val carryOver = Versioned.dataFiles(baseDir)
         .filterNot(f => scannedNames(f.getFileName.toString))
-      carried = carryOver.map { f =>
-        val tgt = staged.resolve(f.getFileName.toString)
-        try Files.createLink(tgt, f)
-        catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
-        tgt
-      }
+      val links = carryOver.map(linkInto(_, staged))
       val dvNames = graft.operators.DeletionVectors.carryFor(
         baseDir, staged, carryOver.map(_.getFileName.toString).toSet)
-      carriedDvs = dvNames.map(
-        graft.operators.DeletionVectors.dvDir(staged).resolve(_))
       // a fully-pruned no-op still commits a readable version; the
       // schema needs a carrier only when nothing else survived
       if (Versioned.listParquet(staged).isEmpty)
         GroupParquetWriterFactory(schema, staged.toString)
           .emptyFile(uniqueEmptyName())
-      writeRowLevelMarker(staged, scannedNames)
-      Versioned.writeFilesManifest(staged,
-        Versioned.listParquet(staged).map(_.getFileName.toString), dvNames,
-        statsFrom = Some(baseDir))
-      val next = base + 1
-      if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) {
-        Versioned.writeLatestHint(root, next)
-        Versioned.writeStamp(root, next, stamp)
-        // bloom sidecar (no-op unless configured): carried files reuse
-        // their lines from the base version, new files get one build scan
-        graft.operators.BloomSidecar.ensure(root, next)
-        graft.operators.NdvSidecar.ensure(root, next)
-        return next
-      }
-      attempt += 1 // v=next claimed concurrently — re-check and rebase
+      carried(staged, links, dvNames, Some(baseDir))
     }
-    conflict("20 rebase attempts exhausted")
   }
 
-  /** Publish a staged directory as the next version. Optimistic
-    * concurrency: compute `next`, link the previous version's files in
-    * (append mode), atomically rename; if another writer claimed
-    * `v=next` first, the rename fails, the stale links are replaced
-    * against the NEW latest, and the commit retries — serialized
-    * multi-writer appends without a lock service, bounded and loud. */
+  /** Publish a staged append (`appendPrev`: the previous version's
+    * files and DVs carry over — dropping a DV would resurrect its
+    * deleted rows) or snapshot replace as the next version. */
   def commitStaged(root: String, staged: Path, schema: StructType,
                    appendPrev: Boolean, stamp: Long,
                    epochTag: Option[String]): Long = {
@@ -4586,52 +4612,15 @@ private[graft] object VersionedWriteIo {
       Files.write(staged.resolve("_graft_epoch"),
         t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    var attempt = 0
-    var prevLinked: Seq[Path] = Nil
-    var prevDvLinked: Seq[Path] = Nil
-    while (attempt < 20) {
-      val prev = Versioned.latestVersion(root)
-      val next = prev.map(_ + 1).getOrElse(0L)
-      var dvNames: Seq[String] = Nil
-      if (appendPrev) {
-        prevLinked.foreach(Files.deleteIfExists(_))
-        prevDvLinked.foreach(Files.deleteIfExists(_))
-        prevLinked = prev.toSeq.flatMap { p =>
-          // SAME names: file names are unique at creation (UUID'd) and
-          // immutable across commits — identity the conflict checker,
-          // DV sidecars, and carry-over logic all key on
-          Versioned.dataFiles(Paths.get(root, s"v=$p")).map { f =>
-            val tgt = staged.resolve(f.getFileName.toString)
-            try Files.createLink(tgt, f)
-            catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
-            tgt
-          }
-        }
-        // append keeps every previous file, so every previous DV rides
-        // along — dropping one would resurrect its deleted rows
-        dvNames = prev.toSeq.flatMap(p =>
-          graft.operators.DeletionVectors.carryAll(
-            Paths.get(root, s"v=$p"), staged))
-        prevDvLinked = dvNames.map(
-          graft.operators.DeletionVectors.dvDir(staged).resolve(_))
-      }
-      Versioned.writeFilesManifest(staged,
-        Versioned.listParquet(staged).map(_.getFileName.toString), dvNames,
-        statsFrom = prev.map(p => Paths.get(root, s"v=$p")))
-      if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) {
-        Versioned.writeLatestHint(root, next)
-        Versioned.writeStamp(root, next, stamp)
-        // bloom sidecar (no-op unless configured): carried files reuse
-        // their lines from the base version, new files get one build scan
-        graft.operators.BloomSidecar.ensure(root, next)
-        graft.operators.NdvSidecar.ensure(root, next)
-        return next
-      }
-      attempt += 1 // v=next was claimed concurrently — recompute
+    commit(root, staged, Some(stamp)) { prev =>
+      val prevDir = prev.map(p => Paths.get(root, s"v=$p"))
+      if (!appendPrev) Attempt(statsFrom = prevDir)
+      else carried(staged,
+        prevDir.toSeq.flatMap(Versioned.dataFiles(_).map(linkInto(_, staged))),
+        prevDir.toSeq.flatMap(
+          graft.operators.DeletionVectors.carryAll(_, staged)),
+        prevDir)
     }
-    throw new IllegalStateException(
-      s"graft-versioned: could not commit under $root after 20 attempts — " +
-        "either extreme write contention or the root is not writable")
   }
 }
 

@@ -1,6 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,12 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.operators.Versioned
 
-/** The commit-atomicity seam: the optimistic claim loops must
-  * serialize through ANY [[CommitStore]] whose version claim is
-  * fail-closed — including an object-store-shaped one whose "rename"
-  * is copy+delete (non-atomic data movement) and whose claims
-  * spuriously fail (a racing conditional put). The POSIX default's
-  * put-if-absent contract is pinned directly. */
+/** The commit-atomicity seam: every publish path of the one commit
+  * loop must serialize through ANY [[CommitStore]] whose version claim
+  * is fail-closed — including an object-store-shaped one whose
+  * "rename" is copy+delete (non-atomic data movement) and whose claims
+  * spuriously fail (a racing conditional put) — and faults at the seam
+  * (a throwing hint publish, a competing commit) must fail loudly or
+  * not at all. The POSIX default's put-if-absent contract is pinned
+  * directly. */
 class CommitStoreSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
@@ -23,71 +27,6 @@ class CommitStoreSpec extends AnyFunSuite with SparkSpec {
 
   private def rows(d: DataFrame): Seq[String] =
     d.collect().map(_.toString).sorted.toSeq
-
-  /** Object-store emulation (the S3+coordinator shape): the version
-    * CLAIM is a putIfAbsent on a concurrent map (the conditional put /
-    * DynamoDB LogStore entry — the only atomic primitive assumed), the
-    * data then moves by per-file COPY + DELETE — deliberately not a
-    * rename, and deliberately after the claim. `spuriousLosses` makes
-    * the first N claims report "lost" even when free, forcing the
-    * callers' rebase loops to run. */
-  private final class ObjectStoreSim(spuriousLosses: Int) extends CommitStore {
-    val claims = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-    // a version is COMMITTED when its copy finished — the claim record,
-    // not the directory listing, is the log (the seam's list contract)
-    val completed = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-    private val spurious =
-      new java.util.concurrent.atomic.AtomicInteger(spuriousLosses)
-    val lostClaims = new java.util.concurrent.atomic.AtomicInteger(0)
-
-    private def key(root: Path, version: Long): String =
-      root.resolve(s"v=$version").toString
-
-    override def publishVersion(root: Path, staged: Path,
-                                version: Long): Boolean = {
-      if (spurious.getAndUpdate(x => math.max(0, x - 1)) > 0) {
-        lostClaims.incrementAndGet()
-        return false
-      }
-      val target = root.resolve(s"v=$version")
-      val won = Files.notExists(target) &&
-        claims.putIfAbsent(key(root, version), true) == null
-      if (!won) { lostClaims.incrementAndGet(); return false }
-      // non-atomic data movement AFTER the atomic claim: copy the
-      // staged tree file by file, then delete the staging dir; a
-      // racing lister must not see this half-copied dir as committed
-      Files.createDirectories(target)
-      val stream = Files.walk(staged)
-      try {
-        val it = stream.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val rel = staged.relativize(p)
-          if (Files.isDirectory(p)) {
-            if (rel.toString.nonEmpty)
-              Files.createDirectories(target.resolve(rel.toString))
-          } else Files.copy(p, target.resolve(rel.toString))
-        }
-      } finally stream.close()
-      Versioned.deleteRecursively(staged)
-      completed.put(key(root, version), true)
-      true
-    }
-
-    override def publishFile(target: Path, bytes: Array[Byte]): Unit =
-      PosixCommitStore.publishFile(target, bytes)
-
-    // the log: every directory the sim didn't claim (pre-existing
-    // history) plus claims whose copy COMPLETED — never an in-flight one
-    override def listVersions(root: Path): Seq[Long] =
-      PosixCommitStore.listVersions(root).filter { v =>
-        val k = key(root, v)
-        !claims.containsKey(k) || completed.containsKey(k)
-      }
-
-    override def latestVersion(root: Path): Option[Long] =
-      listVersions(root).lastOption
-  }
 
   test("PosixCommitStore.publishVersion is put-if-absent: an existing " +
       "version loses the claim and the staging dir survives for rebase") {
@@ -123,40 +62,53 @@ class CommitStoreSpec extends AnyFunSuite with SparkSpec {
     assert(leftovers.isEmpty, s"tmp leftovers: $leftovers")
   }
 
-  test("concurrent appends serialize through a copy+delete object-store " +
-      "sim with racing claims (the claim loop, not rename, is the truth)") {
-    val sim = new ObjectStoreSim(spuriousLosses = 3)
-    CommitStore.withStore(sim) {
-      val root = Files.createTempDirectory("cs_sim_").toString
-      df((0L, 0L, "base")).write.format("graft-versioned")
-        .option("create", "true").mode("append").save(root)
-      val schema = df((0L, 0L, "")).schema
-      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val threads = (1 to 4).map { i =>
-        new Thread(() => {
-          try {
-            val bw = new GraftBatchWrite(root, schema, replace = false,
-              commitTs = Some(1000L + i), queryId = s"cs$i")
-            val w = bw.createBatchWriterFactory(null).createWriter(0, i.toLong)
-            w.write(org.apache.spark.sql.catalyst.InternalRow(
-              i.toLong, i * 10L,
-              org.apache.spark.unsafe.types.UTF8String.fromString(s"w$i")))
-            bw.commit(Array(w.commit()))
-          } catch { case t: Throwable => errors.add(t) }
-        })
+  // the 4-writer serialization test, over the POSIX default and the
+  // object-store sim (whose spurious losses force the rebase loop)
+  Seq[(String, () => CommitStore)](
+    "PosixCommitStore" -> (() => PosixCommitStore),
+    "a copy+delete object-store sim with racing claims (the claim loop, " +
+      "not rename, is the truth)" -> (() => new ObjectStoreSim(spuriousLosses = 3))
+  ).foreach { case (label, mkStore) =>
+    test(s"concurrent appends serialize through $label") {
+      val store = mkStore()
+      CommitStore.withStore(store) {
+        val root = Files.createTempDirectory("cs_conc_").toString
+        df((0L, 0L, "base")).write.format("graft-versioned")
+          .option("create", "true").mode("append").save(root)
+        val schema = df((0L, 0L, "")).schema
+        val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+        val threads = (1 to 4).map { i =>
+          new Thread(() => {
+            try {
+              val bw = new GraftBatchWrite(root, schema, replace = false,
+                commitTs = Some(1000L + i), queryId = s"cs$i")
+              val w = bw.createBatchWriterFactory(null).createWriter(0, i.toLong)
+              w.write(org.apache.spark.sql.catalyst.InternalRow(
+                i.toLong, i * 10L,
+                org.apache.spark.unsafe.types.UTF8String.fromString(s"w$i")))
+              bw.commit(Array(w.commit()))
+            } catch { case t: Throwable => errors.add(t) }
+          })
+        }
+        threads.foreach(_.start()); threads.foreach(_.join(60000))
+        assert(errors.isEmpty, s"concurrent commit failed: ${errors.peek()}")
+        // 1 bootstrap + 4 appends serialized into distinct versions; the
+        // final snapshot holds every writer's row plus the base — no
+        // append was lost to a stale prev-link
+        assert(Versioned.versions(root) === Seq(0L, 1L, 2L, 3L, 4L))
+        assert(rows(Versioned.read(spark, root)) === rows(df(
+          (0L, 0L, "base"), (1L, 10L, "w1"), (2L, 20L, "w2"),
+          (3L, 30L, "w3"), (4L, 40L, "w4"))))
+        store match {
+          case sim: ObjectStoreSim =>
+            assert(sim.lostClaims.get() >= 3,
+              "the spurious losses must have exercised the rebase loop")
+            // every version's content came through the copy+delete
+            // path — the sim, not posix rename, published them all
+            assert(sim.claims.size() === 5)
+          case _ =>
+        }
       }
-      threads.foreach(_.start()); threads.foreach(_.join(60000))
-      assert(errors.isEmpty, s"concurrent commit failed: ${errors.peek()}")
-      assert(sim.lostClaims.get() >= 3,
-        "the spurious losses must have exercised the rebase loop")
-      // serialized into distinct versions, nothing lost to a stale link
-      assert(Versioned.versions(root) === Seq(0L, 1L, 2L, 3L, 4L))
-      assert(rows(Versioned.read(spark, root)) === rows(df(
-        (0L, 0L, "base"), (1L, 10L, "w1"), (2L, 20L, "w2"),
-        (3L, 30L, "w3"), (4L, 40L, "w4"))))
-      // every version's content came through the copy+delete path —
-      // the sim, not posix rename, published them all
-      assert(sim.claims.size() === 5)
     }
   }
 
@@ -174,5 +126,107 @@ class CommitStoreSpec extends AnyFunSuite with SparkSpec {
       assert(rows(Versioned.read(spark, root)) === rows(df((2L, 20L, "b"))))
       assert(Versioned.versions(root) === Seq(0L, 1L, 2L))
     }
+  }
+
+  // restore, clone, convert and writeNext publish through the same
+  // loop as the DSv2 commits. Each case seeds under the POSIX default
+  // and returns (root, the publish under test, expected rows); the
+  // publish then runs under a sim whose first claim is lost
+  private def seeded(tag: String): String = {
+    val root = Files.createTempDirectory(s"cs_${tag}_").toString
+    Versioned.writeNext(df((1L, 10L, "a"), (2L, 20L, "b")), root, Some(1000L))
+    Versioned.writeNext(df((3L, 30L, "c")), root, Some(2000L))
+    root
+  }
+
+  private def freshDir(tag: String): String =
+    Files.createTempDirectory(s"cs_${tag}_").resolve("t").toString
+
+  Seq[(String, () => (String, () => Long, Seq[String]))](
+    "restoreTo" -> { () =>
+      val root = seeded("restore")
+      (root, () => Versioned.restoreTo(root, 0L, Some(3000L)),
+        Seq("[1,10,a]", "[2,20,b]"))
+    },
+    "cloneTo" -> { () =>
+      val (src, dst) = (seeded("clone"), freshDir("clone_dst"))
+      (dst, () => { Versioned.cloneTo(src, dst, srcVersion = Some(0L)); 0L },
+        Seq("[1,10,a]", "[2,20,b]"))
+    },
+    "convertFrom" -> { () =>
+      val (dir, dst) = (freshDir("convert_src"), freshDir("convert_dst"))
+      df((5L, 50L, "e")).write.parquet(dir)
+      (dst, () => Versioned.convertFrom(dir, dst), Seq("[5,50,e]"))
+    },
+    "writeNext" -> { () =>
+      val root = seeded("next")
+      (root, () => Versioned.writeNext(df((4L, 40L, "d")), root),
+        Seq("[4,40,d]"))
+    }
+  ).foreach { case (path, setup) =>
+    test(s"$path publishes through the CommitStore and survives a lost claim") {
+      val (root, publish, expected) = setup()
+      val sim = new ObjectStoreSim(spuriousLosses = 1)
+      val v = CommitStore.withStore(sim)(publish())
+      assert(sim.lostClaims.get() === 1, "the lost claim must have been retried")
+      assert(sim.claimed(root, v), s"v=$v must publish through the store's claim")
+      assert(Versioned.latestVersion(root) === Some(v))
+      assert(rows(Versioned.read(spark, root)) === expected)
+    }
+  }
+
+  test("a won claim whose hint publish throws still commits; the next " +
+      "commit lands after it") {
+    val root = Files.createTempDirectory("cs_hint_fault_").toString
+    Versioned.writeNext(df((1L, 10L, "a")), root)
+    val hintFails = new FaultyPosixStore(_.getFileName.toString == "_graft_latest")
+    CommitStore.withStore(hintFails) {
+      assert(Versioned.writeNext(df((2L, 20L, "b")), root) === 1L)
+      df((3L, 30L, "c")).write.format("graft-versioned")
+        .mode("append").save(root)
+    }
+    // the hint still says v=0: resolution probes past it
+    assert(new String(Files.readAllBytes(Paths.get(root, "_graft_latest"))) === "0")
+    assert(Versioned.latestVersion(root) === Some(2L))
+    assert(Versioned.writeNext(df((4L, 40L, "d")), root) === 3L)
+    assert(rows(Versioned.read(spark, root, Some(2L))) ===
+      Seq("[2,20,b]", "[3,30,c]"))
+  }
+
+  test("restoreTo against a real competing commit fails loudly, naming the root") {
+    val root = seeded("restore_race")
+    val racer = new FaultyPosixStore(_ => false)
+    // a competing writer commits v=2 just before the restore's claim
+    racer.beforeClaim = () => {
+      racer.beforeClaim = () => ()
+      Versioned.writeNext(df((9L, 90L, "z")), root)
+    }
+    val e = intercept[IllegalStateException] {
+      CommitStore.withStore(racer)(Versioned.restoreTo(root, 0L))
+    }
+    assert(e.getMessage.contains(s"concurrent commit under $root"), e.getMessage)
+    // the competitor's commit stands; the restore left nothing behind
+    assert(Versioned.versions(root) === Seq(0L, 1L, 2L))
+    assert(rows(Versioned.read(spark, root)) === Seq("[9,90,z]"))
+    val left = Files.list(Paths.get(root))
+    try assert(!left.iterator().asScala.exists(
+      _.getFileName.toString.startsWith("_staging")))
+    finally left.close()
+  }
+
+  test("two writeNext racing for one version both commit (no overwrite)") {
+    val root = seeded("next_race")
+    val racer = new FaultyPosixStore(_ => false)
+    racer.beforeClaim = () => {
+      racer.beforeClaim = () => ()
+      Versioned.writeNext(df((7L, 70L, "x")), root)
+    }
+    val v = CommitStore.withStore(racer)(
+      Versioned.writeNext(df((8L, 80L, "y")), root))
+    // the racer took v=2; the loser retried onto v=3 instead of
+    // deleting the racer's committed version
+    assert(v === 3L)
+    assert(rows(Versioned.read(spark, root, Some(2L))) === Seq("[7,70,x]"))
+    assert(rows(Versioned.read(spark, root, Some(3L))) === Seq("[8,80,y]"))
   }
 }

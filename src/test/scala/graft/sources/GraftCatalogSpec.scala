@@ -417,6 +417,57 @@ class GraftCatalogSpec extends AnyFunSuite with SparkSpec {
     assert(JF.exists(planted))
   }
 
+  test("vacuum sweeps every stale _graft_*.tmp sidecar temp in version dirs") {
+    import java.nio.file.{Files => JF, Paths => JP}
+    sql("DROP TABLE IF EXISTS gtest.ns.t10c")
+    sql("CREATE TABLE gtest.ns.t10c (id BIGINT) USING `graft-versioned`")
+    sql("INSERT INTO gtest.ns.t10c VALUES (1), (2)")
+    val vdir = JP.get(s"$warehouse/ns/t10c/v=0")
+    val oldTs = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 3600_000L)
+    // what crashed ndv, stats and sidecar-rewrite publishes leave behind
+    val planted = Seq("_graft_ndv_x.tmp", "_graft_stats_x.tmp", "_graft_sc_x.tmp")
+    planted.foreach { n =>
+      JF.write(vdir.resolve(n), Array[Byte](1))
+      JF.setLastModifiedTime(vdir.resolve(n), oldTs)
+    }
+    val removed = sql(
+      "CALL gtest.sys.vacuum(table => 'ns.t10c', older_than_ms => 1800000)")
+      .collect().map(_.getString(0)).toSeq
+    assert(removed === planted.sorted.map("v=0/" + _), removed.toString)
+    assert(planted.forall(n => !JF.exists(vdir.resolve(n))))
+    assert(sql("SELECT * FROM gtest.ns.t10c").count() === 2L)
+  }
+
+  test("a crashed catalog manifest publish leaves only debris sys.vacuum removes") {
+    import java.nio.file.{Files => JF, Paths => JP}
+    sql("DROP TABLE IF EXISTS gtest.ns.t10d")
+    sql("CREATE TABLE gtest.ns.t10d (id BIGINT) USING `graft-versioned`")
+    sql("INSERT INTO gtest.ns.t10d VALUES (1)")
+    val root = JP.get(s"$warehouse/ns/t10d")
+    def tmps: Seq[String] = {
+      val st = JF.list(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.contains(".tmp")).toList
+      } finally st.close()
+    }
+    val crash = new FaultyPosixStore(_ => true)
+    val e = intercept[Exception] {
+      CommitStore.withStore(crash) {
+        sql("ALTER TABLE gtest.ns.t10d SET TBLPROPERTIES " +
+          "('targetFileBytes'='1048576')")
+      }
+    }
+    assert(chain(e).exists(_.contains("injected crash")), chain(e))
+    assert(tmps.nonEmpty, "the crash must leave its temp file behind")
+    Thread.sleep(5) // the temp must be strictly older than the cutoff
+    sql("CALL gtest.sys.vacuum(table => 'ns.t10d', older_than_ms => 0)").collect()
+    assert(tmps.isEmpty, tmps)
+    assert(sql("SELECT * FROM gtest.ns.t10d").count() === 1L)
+  }
+
   test("sys.manifest exports externally-readable file lists; refuses when wrong") {
     import spark.implicits._
     sql("DROP TABLE IF EXISTS gtest.ns.tman")

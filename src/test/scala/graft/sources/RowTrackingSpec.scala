@@ -270,6 +270,20 @@ class RowTrackingSpec extends AnyFunSuite with SparkSpec {
     assert(vers("grid.ns.rt12") === Map(1L -> 0L, 2L -> (vNow + 1)))
   }
 
+  test("writeNext assigns fresh rows the version it claims") {
+    sql("DROP TABLE IF EXISTS grid.ns.rt15")
+    sql("CREATE TABLE grid.ns.rt15 (id BIGINT, v BIGINT) " +
+      "USING `graft-versioned` TBLPROPERTIES ('rowTracking'='true')")
+    sql("INSERT INTO grid.ns.rt15 VALUES (1, 10)") // v0
+    sql("INSERT INTO grid.ns.rt15 VALUES (2, 20)") // v1
+    import spark.implicits._
+    val root = s"$warehouse/ns/rt15"
+    // staged outside `v=N`, the write still learns its version at the claim
+    assert(Versioned.writeNext(Seq((3L, 30L)).toDF("id", "v"), root) === 2L)
+    sql("REFRESH TABLE grid.ns.rt15")
+    assert(vers("grid.ns.rt15") === Map(3L -> 2L))
+  }
+
   test("clone and restore preserve ids and commit versions") {
     sql("DROP TABLE IF EXISTS grid.ns.rt13")
     sql("CREATE TABLE grid.ns.rt13 (id BIGINT, v BIGINT) " +

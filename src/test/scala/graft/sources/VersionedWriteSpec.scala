@@ -344,36 +344,6 @@ class VersionedWriteSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.format("graft-versioned").load(root).count() === 2L)
   }
 
-  test("concurrent appends serialize: every writer commits, union survives") {
-    val root = freshRoot("conc")
-    df((0L, 0L, "base")).write.format("graft-versioned")
-      .option("create", "true").mode("append").save(root)
-    val schema = df((0L, 0L, "")).schema
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = (1 to 4).map { i =>
-      new Thread(() => {
-        try {
-          val bw = new GraftBatchWrite(root, schema, replace = false,
-            commitTs = Some(1000L + i), queryId = s"conc$i")
-          val w = bw.createBatchWriterFactory(null).createWriter(0, i.toLong)
-          w.write(org.apache.spark.sql.catalyst.InternalRow(
-            i.toLong, i * 10L,
-            org.apache.spark.unsafe.types.UTF8String.fromString(s"w$i")))
-          bw.commit(Array(w.commit()))
-        } catch { case t: Throwable => errors.add(t) }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join(60000))
-    assert(errors.isEmpty, s"concurrent commit failed: ${errors.peek()}")
-    // 1 bootstrap + 4 appends, serialized into distinct versions
-    assert(Versioned.versions(root) === Seq(0L, 1L, 2L, 3L, 4L))
-    // the FINAL snapshot holds every writer's row plus the base —
-    // no append was lost to a stale prev-link
-    assert(rows(Versioned.read(spark, root)) === rows(df(
-      (0L, 0L, "base"), (1L, 10L, "w1"), (2L, 20L, "w2"),
-      (3L, 30L, "w3"), (4L, 40L, "w4"))))
-  }
-
   test("txnAppId/txnVersion: a replayed batch commits nothing") {
     val root = freshRoot("txn")
     def write(ver: Long, rows: (Long, Long, String)*): Unit =
